@@ -26,6 +26,12 @@ import pyarrow.parquet as pq
 
 TOL = 1.2e-4  # one rounding quantum of a 4-decimal value, plus slack
 
+# Lowest recall@10 one ivf or graph read may score against the exact
+# top-10 (on mixed_rw, the exact top-10 of the live state it read). Set
+# below the lowest per-read recall seen over the seeds of the reference
+# runs (perfbench/README.md), so a read that drops neighbours fails the run.
+READ_RECALL_FLOOR = {"ivf": 0.8, "graph": 0.0}
+
 
 def round4(x):
     """Spark's round(x, 4) on a double: HALF_UP on the shortest decimal."""
@@ -70,15 +76,17 @@ def exact_topk(ids, vecs, q, k):
     return [i for _, i in rows], [d for d, _ in rows], dict(zip(ids.tolist(), raw.tolist()))
 
 
-def check_ranked(res, truth_of, expected, k, higher_better=False, exact_len=True, live=None):
-    """Common shape check for a ranked (id, value) result: every value
+def check_ranked(res, truth_of, expected, k, higher_better=False, live=None):
+    """Common shape check for a ranked (id, value) result: k rows (fewer
+    only when the exhaustive `expected` list is shorter), every value
     matches the benchmark's own computation for that id, rows are ordered
     with id tie-breaks, no id repeats, and (when `expected` is given) the
     values equal the exhaustive top-k position by position."""
     ids, vals = res["ids"], res["d"]
     errs = []
-    if exact_len and len(ids) != min(k, len(expected) if expected is not None else k):
-        errs.append(f"{len(ids)} rows, expected {k}")
+    want = k if expected is None else min(k, len(expected))
+    if len(ids) != want:
+        errs.append(f"{len(ids)} rows, expected {want}")
     if len(set(ids)) != len(ids):
         errs.append("repeated id")
     for i, v in zip(ids, vals):
@@ -108,14 +116,16 @@ def check_knn(inp, q, res):
     return check_ranked(res, raw.get, dists, inp.k)
 
 
-def check_ann(inp, q, res, exact=None):
-    """ivf/graph: values must be true distances, ordered, no repeats; the
-    recall against the exact top-k is returned with the errors."""
-    if exact is None:
-        exact = exact_topk(inp.ids, inp.vecs, inp.queries[q], inp.k)
+def check_ann(res, exact, k, floor, live=None):
+    """ivf/graph: k rows of true distances, ordered, no repeats, and a
+    recall against the exact top-k (`exact_topk`'s result) no lower than
+    `floor`. Returns the errors and the recall."""
     ids, _, raw = exact
-    errs = check_ranked(res, raw.get, None, inp.k, exact_len=False)
-    return errs, len(set(res["ids"]) & set(ids)) / inp.k
+    errs = check_ranked(res, raw.get, None, k, live=live)
+    recall = len(set(res["ids"]) & set(ids)) / k
+    if recall < floor:
+        errs.append(f"recall@{k} {recall} below the floor {floor}")
+    return errs, recall
 
 
 # -------------------------------------------------------------- full text
@@ -342,7 +352,8 @@ class Checker:
     def __init__(self, inp):
         self.inp = inp
         self.cache = {}
-        self.recall = {}
+        self.bulk_recall = None
+        self.read_recall = {}
         self.bm25 = self.oracle = self.mh = None
         self.vec_of = {int(i): v for i, v in zip(inp.ids, inp.vecs)}
         self.deleted = set()
@@ -371,10 +382,10 @@ class Checker:
         if len(by_q) != len(self.inp.queries):
             errs.append(f"{len(by_q)} of {len(self.inp.queries)} queries answered")
         for qid, r in by_q.items():
-            ids, _, raw = exact_of(qid)
-            errs += check_ranked(r, raw.get, None, self.inp.k, exact_len=False)
-            recs.append(len(set(r["ids"]) & set(ids)) / self.inp.k)
-        self.recall.setdefault("ivf", recs)
+            e, recall = check_ann(r, exact_of(qid), self.inp.k, READ_RECALL_FLOOR["ivf"])
+            errs += e
+            recs.append(recall)
+        self.bulk_recall = recs
         return errs[:20]
 
     def op(self, rec):
@@ -386,9 +397,8 @@ class Checker:
         if op == "knn":
             return check_knn(inp, q, res)
         if op in ("ivf", "graph"):
-            errs, r = check_ann(inp, q, res, self.exact(q))
-            if rec["phase"] == "warm":
-                self.recall.setdefault(op + "_warm", []).append(r)
+            errs, r = check_ann(res, self.exact(q), inp.k, READ_RECALL_FLOOR[op])
+            self.read_recall.setdefault(op, []).append(r)
             return errs
         if op == "fulltext":
             self.bm25 = self.bm25 or Bm25(self.docs, self.doc_ids)
@@ -401,9 +411,6 @@ class Checker:
         if op == "dedup_minhash":
             self.mh = self.mh or minhash_pairs(self.docs, self.doc_ids)
             return check_minhash(self.mh, spec["planted_pairs"], res)
-        if op == "dedup_simhash":
-            self.sh = self.sh if self.sh is not None else simhash_pairs(self.docs, self.doc_ids)
-            return check_simhash(self.sh, res)
         if op == "ivf_build":
             return [] if res["nlist"] == 32 else [f"nlist {res['nlist']}"]
         if op == "graph_build":
@@ -437,10 +444,8 @@ class Checker:
             return self.bulk(rec, lambda qid: self.live_exact(inp.queries[qid]))
         qv = inp.moved[q * b] if op == "probe" else inp.queries[q]
         live = {i for i in self.vec_of if i not in self.deleted}
-
-        def raw(i):
-            return float(l2sq(self.vec_of[i][None, :], qv)[0]) if i in self.vec_of else None
-        errs = check_ranked(res, raw, None, inp.k, exact_len=False, live=live)
+        errs, r = check_ann(res, self.live_exact(qv), inp.k, READ_RECALL_FLOOR["ivf"], live=live)
+        self.read_recall.setdefault(op, []).append(r)
         if op == "probe" and (not res["ids"] or res["ids"][0] != spec["upsert_ids"][q][0]
                               or res["d"][0] != 0.0):
             errs.append("upserted vector not returned first at distance 0")
@@ -479,6 +484,17 @@ def self_test():
         skipped = {"ids": ids[:9] + [far], "d": dists[:9] + [round4(raw[far])]}
         expect_reject("knn skipped neighbour", check_knn(rag, 0, skipped))
 
+        exact = exact_topk(rag.ids, rag.vecs, rag.queries[0], rag.k)
+        expect_accept("ivf", check_ann(good, exact, rag.k, READ_RECALL_FLOOR["ivf"])[0])
+        short = {"ids": ids[:3], "d": dists[:3]}
+        expect_reject("ivf too few rows", check_ann(short, exact, rag.k, READ_RECALL_FLOOR["ivf"])[0])
+        order = np.argsort(l2sq(rag.vecs, rag.queries[0]), kind="stable")
+        far = sorted((round4(raw[int(rag.ids[i])]), int(rag.ids[i])) for i in order[:3].tolist()
+                     + order[100:107].tolist())
+        poor = {"ids": [i for _, i in far], "d": [d for d, _ in far]}
+        expect_reject("ivf true distances but not the top 10",
+                      check_ann(poor, exact, rag.k, READ_RECALL_FLOOR["ivf"])[0])
+
         bm = Bm25(rag.docs, rag.doc_ids)
         terms = rag.spec["term_queries"][0]
         sc = sorted(bm.scores(terms).items(), key=lambda x: (-x[1], x[0]))[:rag.k]
@@ -499,17 +515,26 @@ def self_test():
         rw = Inputs(os.path.join(tmp, "mixed_rw"))
         ck = Checker(rw)
         up = rw.spec["upsert_ids"][0]
+
+        def live_top(qv):
+            ids, dists, _ = ck.live_exact(qv)
+            return {"ids": ids, "d": dists}
         ck.op({"phase": "timed", "op": "upsert", "q": 0, "res": None})
-        stale_d = round4(l2sq(rw.vecs[up[0]][None, :], rw.moved[0])[0])
-        expect_reject("mixed_rw stale upserted vector", ck.op(
-            {"phase": "timed", "op": "probe", "q": 0, "res": {"ids": [up[0]], "d": [stale_d]}}))
+        probe = live_top(rw.moved[0])
         expect_accept("mixed_rw probe", ck.op(
-            {"phase": "timed", "op": "probe", "q": 0, "res": {"ids": [up[0]], "d": [0.0]}}))
+            {"phase": "timed", "op": "probe", "q": 0, "res": probe}))
+        stale = dict(probe, d=[round4(l2sq(rw.vecs[up[0]][None, :], rw.moved[0])[0])] + probe["d"][1:])
+        expect_reject("mixed_rw stale upserted vector", ck.op(
+            {"phase": "timed", "op": "probe", "q": 0, "res": stale}))
+        # a query whose exact top-10 holds an id the next delete removes
+        dels = set(rw.spec["delete_ids"][0])
+        qi = next(i for i in range(len(rw.queries)) if dels & set(live_top(rw.queries[i])["ids"]))
+        before = live_top(rw.queries[qi])
         ck.op({"phase": "timed", "op": "delete", "q": 0, "res": None})
-        gone = rw.spec["delete_ids"][0][0]
-        d_gone = round4(l2sq(rw.vecs[gone][None, :], rw.queries[0])[0])
+        expect_accept("mixed_rw read after delete", ck.op(
+            {"phase": "timed", "op": "ivf", "q": qi, "res": live_top(rw.queries[qi])}))
         expect_reject("mixed_rw tombstoned id returned", ck.op(
-            {"phase": "timed", "op": "ivf", "q": 0, "res": {"ids": [gone], "d": [d_gone]}}))
+            {"phase": "timed", "op": "ivf", "q": qi, "res": before}))
 
         mh = minhash_pairs(rag.docs, rag.doc_ids)
         planted = [p for p in rag.spec["planted_pairs"] if tuple(sorted(p)) in mh]

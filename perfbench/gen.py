@@ -18,20 +18,22 @@ import pyarrow.parquet as pq
 
 import check
 
-DIM = 32
+# The repository's own sizes: its sf0.1 test fixture holds 500 embeddings
+# of dimension 64 (BASELINE.md, FIXTURES.md), the dimension the library's
+# HashingEmbedder(64) gives documents; the reference serves a corpus of 153
+# documents (its knowledge_data.csv). Both workloads are small collections,
+# so per-request fixed costs dominate.
+DIM = 64
 K = 10
-
-# Per-workload sizes. Serving and read/write workloads keep the collection
-# small so per-request fixed costs dominate; the batch workload is large
-# enough that task execution and shuffle dominate.
 SIZES = {
-    "rag_serve": dict(n_vec=1000, n_comp=16, n_docs=200, n_queries=24),
-    "mixed_rw": dict(n_vec=2000, n_comp=32, n_docs=0, n_queries=24),
+    "rag_serve": dict(n_vec=500, n_comp=16, n_docs=153, n_queries=24),
+    "mixed_rw": dict(n_vec=500, n_comp=16, n_docs=0, n_queries=24),
 }
 # mixed_rw write batches and cycle count: each cycle upserts one batch,
-# deletes another and compacts both.
-RW_BATCH = 16
-RW_CYCLES = 40
+# deletes another and compacts both. The id pools are disjoint, so the
+# cycles use 2 * RW_BATCH * RW_CYCLES of the 500 ids.
+RW_BATCH = 8
+RW_CYCLES = 24
 VOCAB = 3000
 ZIPF_S = 1.07
 

@@ -3,7 +3,7 @@
 workload against its public calls, checks every output, and prints the
 metrics.
 
-    python3 perfbench/run.py --workload rag_serve --seed 3 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload rag_serve --seed 3 --seconds 10 --trace 0
 
 Run it from the repository root. The last line of standard output is one
 JSON object: `correct`, `attempted`, `failed` and `metrics` (the end-to-end
@@ -21,6 +21,7 @@ import argparse
 import glob
 import hashlib
 import json
+import math
 import os
 import shutil
 import statistics
@@ -38,7 +39,7 @@ import gen  # noqa: E402
 
 # Set-ups per run (set-up time is their median) and warm-up rounds before
 # the timed window opens.
-WORKLOADS = {"rag_serve": dict(setups=1, warm=1), "mixed_rw": dict(setups=2, warm=1)}
+WORKLOADS = {"rag_serve": dict(setups=1, warm=1), "mixed_rw": dict(setups=3, warm=2)}
 HEAP = "2g"
 JVM_TIMEOUT_S = 160
 ADD_OPENS = ["java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
@@ -124,14 +125,17 @@ def run_jvm(cp, workload, inputs, work, seconds, trace, out):
 def summarise(workload, inp, records, trace, seed):
     ck = check.Checker(inp)
     ops, setups, meta, errors = [], [], {}, []
-    per_op = {}
+    per_op, stages = {}, {}
     for rec in records:
         if rec["t"] == "setup":
             setups.append(rec["s"])
         elif rec["t"] == "meta":
             meta = rec
         elif rec["t"] == "op":
-            st = per_op.setdefault(rec["op"], {"attempted": 0, "failed": 0, "checked": 0, "ms": []})
+            if rec["phase"] == "setup":
+                stages.setdefault(rec["op"], []).append(round(rec["ms"] / 1e3, 2))
+            st = per_op.setdefault(rec["op"], {"attempted": 0, "failed": 0, "checked": 0, "ms": [],
+                                               "warm_ms": []})
             timed = rec["phase"] == "timed"
             if timed:
                 st["attempted"] += 1
@@ -148,24 +152,36 @@ def summarise(workload, inp, records, trace, seed):
             if timed:
                 st["ms"].append(rec["ms"])
                 ops.append(rec)
+            elif rec["phase"] == "warm":
+                st["warm_ms"].append(rec["ms"])
+    p50 = {name: statistics.median(st["ms"]) for name, st in per_op.items() if st["ms"]}
     for name, st in per_op.items():
-        p50 = statistics.median(st["ms"]) if st["ms"] else None
+        if not st["attempted"] and not st["warm_ms"]:
+            continue  # a set-up stage or the recall call: timed in the line below
+        rec = ck.read_recall.get(name)
         print(json.dumps({"op": name, "attempted": st["attempted"], "failed": st["failed"],
-                          "checked": st["checked"], "p50_ms": p50}))
+                          "checked": st["checked"], "p50_ms": p50.get(name),
+                          "recall_mean": statistics.mean(rec) if rec else None,
+                          "recall_min": min(rec) if rec else None,
+                          "warm_ms": [round(x) for x in st["warm_ms"]],
+                          "timed_ms": [round(x) for x in st["ms"]]}))
     for e in errors[:10]:
         print("check failed:", e)
     attempted = sum(st["attempted"] for st in per_op.values())
     failed = sum(st["failed"] for st in per_op.values())
-    if not ops or not setups or "ivf" not in ck.recall:
-        fail("run produced no timed ops, set-ups or recall set")
-    recall = statistics.mean(ck.recall["ivf"])
-    # one client in a closed loop: completed ops per second of op time
-    ops_per_s = len(ops) / (sum(r["ms"] for r in ops) / 1e3)
-    print(json.dumps({"ops_per_s": ops_per_s, "setups_s": setups, "jvm": meta,
-                      "recall_at_10": {k: statistics.mean(v) for k, v in ck.recall.items()}}))
+    if not ops or not setups or ck.bulk_recall is None or "ivf" not in p50:
+        fail("run produced no timed ops, set-ups, ivf reads or recall set")
+    # one client, each op type weighed the same: the geometric mean over op
+    # types of the rate 1 / median latency, so a cheap op's gain moves it
+    # as much as an expensive op's
+    ops_per_s = math.exp(statistics.mean(math.log(1e3 / v) for v in p50.values()))
+    print(json.dumps({"ops_per_s": ops_per_s, "setups_s": setups, "setup_stages_s": stages,
+                      "jvm": meta}))
     if not trace:
         m = {"setup_s": (statistics.median(setups), "s"), "ops_per_s": (ops_per_s, "1/s"),
-             "recall_at_10": (recall, "ratio"), "peak_rss_mb": (meta["peak_rss_mb"], "MB")}
+             "ivf_p50_ms": (p50["ivf"], "ms"),
+             "recall_at_10": (statistics.mean(ck.bulk_recall), "ratio"),
+             "peak_rss_mb": (meta["peak_rss_mb"], "MB")}
     else:
         m = layer_metrics(ops, records, seed, workload)
     return not errors, attempted, failed, {k: {"value": v, "unit": u} for k, (v, u) in m.items()}
